@@ -2213,7 +2213,7 @@ def oracle_sql() -> dict[str, str]:
         "text_quality_filter": f"""
             WITH w AS (
               SELECT doc_id, text,
-                     CASE WHEN trim(text) = '' THEN []::VARCHAR[]
+                     CASE WHEN trim(coalesce(text, '')) = '' THEN []::VARCHAR[]
                           ELSE regexp_split_to_array(trim(text), '\\s+') END AS ws
               FROM documents
             ), m AS (

@@ -105,10 +105,12 @@ def kg_throughput(spark, sf: float) -> tuple[float, int, float]:
 
     # full materialization leg: subject-fragment routing + partitioned
     # parquet write with checkpoint manifest + per-fragment lineage (the
-    # north-rule output path), timed separately from the compute leg
+    # north-rule output path), timed on checkpointed quads so the number
+    # is the write alone, not a re-run of the extraction timed above
     from rdf_dataset_fragmenter_js_spark.kg.pipeline import fragment_and_write
 
     spark.catalog.clearCache()
+    quads = build_quads(pages).localCheckpoint(eager=True)
     out = tempfile.mkdtemp(prefix="kg_bench_frags_")
     t0 = time.time()
     # skew_salt=4: this corpus's fragment keys are the closed canonical-
@@ -116,7 +118,7 @@ def kg_throughput(spark, sf: float) -> tuple[float, int, float]:
     # safe default salt=1 and salt=8 over-shards (BENCH.md "Skew A/B",
     # tools/skew_bench.py) — the knob applied exactly as a cluster user
     # would tune it for a known-skewed corpus.
-    frag_metrics = fragment_and_write(build_quads(pages), out, skew_salt=4)
+    frag_metrics = fragment_and_write(quads, out, skew_salt=4)
     frag_sec = time.time() - t0
     frag_metrics["total_sec"] = round(frag_sec, 3)
     return (n_triples / sec if sec > 0 else 0.0, n_triples, sec, frag_metrics)

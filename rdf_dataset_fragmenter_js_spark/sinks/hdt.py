@@ -5,13 +5,14 @@ written file into a ``.hdt`` binary by shelling out to a **dockerized
 rdf2hdt** (``convertSingleFile``, ``QuadSinkHdt.ts:61-98``) with a default
 ``conversionConcurrency`` of **1** (documented "really slow",
 ``README.md:322-323``). This engine instead builds the HDT binary
-**natively and distributed**: the same per-path ``applyInPandas`` shuffle
-that backs :func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`
-co-locates each fragment's quads on one task, and that task serializes the
-HDT file directly — every executor slot converts fragments in parallel, no
-docker, no intermediate file unless ``removeSourceFiles=False`` asks to
-keep one (the reference's option, default ``True``,
-``QuadSinkHdt.ts:33-35``).
+**natively and distributed**: the sorted-group writer that backs
+:func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`
+(one shuffle on the mapped path, then one Arrow pass per partition that
+hands each fragment's rows to a render callback) serializes each HDT file
+directly in the task holding that fragment — every executor slot converts
+fragments in parallel, no docker, no intermediate file unless
+``removeSourceFiles=False`` asks to keep one (the reference's option,
+default ``True``, ``QuadSinkHdt.ts:33-35``).
 
 Binary layout
 -------------
@@ -544,9 +545,11 @@ def write_fragment_hdt(
     file_extension: str | None = None,
     base_uri: str | None = None,
 ) -> DataFrame:
-    """Distributed HDT conversion: one task per mapped ``path`` builds that
-    fragment's ``.hdt`` directly (vs the reference's write-file +
-    sequential docker ``rdf2hdt`` loop, ``QuadSinkHdt.ts:100-115``).
+    """Distributed HDT conversion: each mapped ``path``'s ``.hdt`` is built
+    directly in the task that holds that fragment (vs the reference's
+    write-file + sequential docker ``rdf2hdt`` loop,
+    ``QuadSinkHdt.ts:100-115``), through the same sorted-group writer as
+    :func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`.
 
     ``remove_source_files=False`` additionally writes the source RDF file
     the reference would have kept — supported for the line formats
@@ -554,10 +557,9 @@ def write_fragment_hdt(
     the same task from the pre-computed JVM-side ``line`` column so the
     whole sink stays one shuffle. Returns DataFrame[path, n_triples]
     (the writes run when it is acted on, e.g. ``.collect()``)."""
-    import pandas as pd
-
     from rdf_dataset_fragmenter_js_spark.sinks.paths import (
-        _check_local_master,
+        _render_lines,
+        _write_sorted_groups,
         forbid_named_graphs,
     )
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
@@ -578,7 +580,6 @@ def write_fragment_hdt(
             "pass with removeSourceFiles=True (n-quads/n-triples keep "
             "sources natively)"
         )
-    _check_local_master(routed_with_path, "write_fragment_hdt")
 
     src = routed_with_path
     if output_format == "application/n-triples":
@@ -586,38 +587,19 @@ def write_fragment_hdt(
     keep_sources = not remove_source_files
     cols = ["path", "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang"]
     if keep_sources:
-        lines = serialize_nquads(src)
-        src = lines.select(*cols, F.col("line"))
+        src = serialize_nquads(src).select(*cols, "line")
     else:
         src = src.select(*cols)
-    ext = file_extension
 
-    def convert_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel = pdf["path"].iloc[0]
-        target = os.path.join(output_dir, hdt_path_for(rel, ext))
-        os.makedirs(os.path.dirname(target) or ".", exist_ok=True)
-        rows = zip(
-            pdf["s_type"],
-            pdf["s"],
-            pdf["p"],
-            pdf["o_type"],
-            pdf["o"],
-            (None if pd.isna(v) else v for v in pdf["o_datatype"]),
-            (None if pd.isna(v) else v for v in pdf["o_lang"]),
-        )
+    def render(rel, t):
+        rows = zip(*(t.column(c).to_pylist() for c in cols[1:]))
         blob, n_triples = _build_hdt_counted(rows, base_uri or "file://" + rel)
-        with open(target, "wb") as f:
-            f.write(blob)
+        files = [(hdt_path_for(rel, file_extension), blob)]
         if keep_sources:
-            source_target = os.path.join(output_dir, rel)
-            os.makedirs(os.path.dirname(source_target) or ".", exist_ok=True)
-            with open(source_target, "w") as f:
-                f.write("\n".join(pdf["line"]) + "\n")
-        return pd.DataFrame({"path": [rel], "n_triples": [n_triples]})
+            files += _render_lines(rel, t)[1]
+        return n_triples, files
 
-    return src.groupBy("path").applyInPandas(
-        convert_group, schema="path string, n_triples long"
-    )
+    return _write_sorted_groups(src, output_dir, render, count_col="n_triples")
 
 
 def read_hdt_files(spark, path, base_iri: str | None = None) -> DataFrame:

@@ -136,8 +136,9 @@ _TEXT_FORMATS = {
 #: config compiler consume these instead of hand-copied tuples, so adding
 #: a format/alias is a single edit
 NQUADS_FORMATS = tuple(k for k, v in _TEXT_FORMATS.items() if v == "nquads")
-TRIPLES_ONLY_FORMATS = tuple(k for k, v in _TEXT_FORMATS.items() if v == "ntriples")
-LINE_APPENDABLE_FORMATS = NQUADS_FORMATS + TRIPLES_ONLY_FORMATS
+LINE_APPENDABLE_FORMATS = tuple(
+    k for k, v in _TEXT_FORMATS.items() if v in ("nquads", "ntriples")
+)
 
 
 def forbid_named_graphs(df: DataFrame) -> DataFrame:
@@ -160,7 +161,7 @@ def forbid_named_graphs(df: DataFrame) -> DataFrame:
     )
 
 
-def _check_local_master(df: DataFrame, what: str) -> None:
+def _check_local_master(df: DataFrame) -> None:
     # Executor tasks write via plain open(): correct only when executors
     # share the driver filesystem (local[k]). On a real cluster the files
     # would scatter across executor-local disks — fail fast there and point
@@ -168,8 +169,9 @@ def _check_local_master(df: DataFrame, what: str) -> None:
     master = df.sparkSession.conf.get("spark.master", "")
     if master and not master.startswith("local"):
         raise NotImplementedError(
-            f"{what} writes one file per fragment from executor tasks via "
-            f"the local filesystem; master={master!r} is not local, so "
+            "per-fragment file sinks write one file per fragment from "
+            "executor tasks via the local filesystem; "
+            f"master={master!r} is not local, so "
             "outputs would land on executor-local disks. Use "
             "write_fragments (partitioned parquet via the cluster "
             "filesystem) for non-local deployments, or run the text "
@@ -177,8 +179,100 @@ def _check_local_master(df: DataFrame, what: str) -> None:
         )
 
 
+def _write_sorted_groups(
+    df: DataFrame,
+    output_dir: str,
+    render,
+    count_col: str = "n_quads",
+    append: bool = False,
+) -> DataFrame:
+    """The one per-document file writer behind every text and HDT sink.
+
+    ``df`` holds ``path`` plus the columns ``render`` reads. One shuffle on
+    ``path`` (``spark.sql.shuffle.partitions`` partitions), a sort within
+    each partition, then one ``mapInArrow`` pass: each path's consecutive
+    rows — across Arrow batches if need be — go to ``render(path, table)``,
+    which returns ``(count, [(relative_file, str | bytes), ...])``; those
+    files are written (appended with ``append``) one at a time per task,
+    the reference's open-file bound (``ParallelFileWriter.ts:24-69``).
+    Returns DataFrame[path, <count_col>], lazily: acting on it writes."""
+    import itertools
+    import os
+
+    import pyarrow as pa
+
+    _check_local_master(df)
+    out_schema = pa.schema([("path", pa.string()), (count_col, pa.int64())])
+    mode = "a" if append else "w"
+
+    def write_partition(batches):
+        held_path, held, written = None, [], {"path": [], count_col: []}
+
+        def flush():
+            n, files = render(held_path, pa.Table.from_batches(held))
+            for rel, content in files:
+                target = os.path.join(output_dir, rel)
+                os.makedirs(os.path.dirname(target), exist_ok=True)
+                binary = "b" if isinstance(content, bytes) else ""
+                with open(target, mode + binary) as f:
+                    f.write(content)
+            written["path"].append(held_path)
+            written[count_col].append(n)
+
+        for batch in batches:
+            start = 0
+            for path, run in itertools.groupby(batch.column("path").to_pylist()):
+                size = sum(1 for _ in run)
+                if held and path != held_path:
+                    flush()
+                    held = []
+                held_path = path
+                held.append(batch.slice(start, size))
+                start += size
+        if held:
+            flush()
+        yield pa.RecordBatch.from_pydict(written, schema=out_schema)
+
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.repartition(n_parts, "path")
+        .sortWithinPartitions("path")
+        .mapInArrow(write_partition, f"path string, {count_col} long")
+    )
+
+
+def _render_lines(path: str, t) -> tuple:
+    lines = t.column("line").to_pylist()
+    return len(lines), [(path, "\n".join(lines) + "\n")]
+
+
+def _render_trig(path: str, t) -> tuple:
+    by_graph: dict = {}
+    for g, line in zip(t.column("g").to_pylist(), t.column("line").to_pylist()):
+        by_graph.setdefault(g, []).append(line)
+    parts = by_graph.pop(None, [])
+    for g in sorted(by_graph):
+        label = g if g.startswith("_:") else "<" + g + ">"
+        parts += ["GRAPH " + label + " {", *by_graph[g], "}"]
+    return t.num_rows, [(path, "\n".join(parts) + "\n")]
+
+
+#: term columns of a quad, in the order ``serialize_jsonld`` takes them
+_TERMS = ("s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang", "g")
+
+
+def _render_jsonld(path: str, t) -> tuple:
+    from rdf_dataset_fragmenter_js_spark.sources.jsonld import serialize_jsonld
+
+    rows = zip(*(t.column(c).to_pylist() for c in _TERMS))
+    return t.num_rows, [(path, serialize_jsonld(list(rows)))]
+
+
 def write_fragment_files(
-    routed_with_path: DataFrame, output_dir: str, output_format: str | None = None
+    routed_with_path: DataFrame,
+    output_dir: str,
+    output_format: str | None = None,
+    append: bool = False,
 ) -> DataFrame:
     """Fixture-exact file layout: ONE serialized RDF file per mapped
     ``path`` — the reference's actual on-disk output (``QuadSinkFile``
@@ -193,19 +287,16 @@ def write_fragment_files(
     (``GRAPH <g> { … }`` blocks), ``application/ld+json`` (expanded form
     via :func:`~rdf_dataset_fragmenter_js_spark.sources.jsonld.serialize_jsonld`).
 
-    Spark cannot name output files arbitrarily through the native writer, so
-    each (path) group is written by its own task via ``applyInPandas`` —
-    the shuffle co-locates a fragment's quads on one task (the batch analog
-    of the reference's per-file append stream), parents are mkdir-ed
-    lazily (``ParallelFileWriter.ts:51-69``), and file content order is the
-    arrival multiset (SURVEY.md §4.3: parity is per-file quad multisets).
+    Spark cannot name output files arbitrarily through the native writer,
+    so :func:`_write_sorted_groups` writes them from executor tasks, one
+    fragment at a time; file content order is not the arrival order
+    (SURVEY.md §4.3: parity is per-file quad multisets). ``append=True``
+    (line formats only) appends instead of overwriting — the incremental
+    write of the streaming pipeline, at-least-once under micro-batch
+    replay like the reference's per-file append streams.
 
     Returns DataFrame[path, n_quads] (the write happens when it is acted
     on — e.g. ``.collect()`` — keeping this composable as a plan)."""
-    import os as _os
-
-    import pandas as pd
-
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
 
     if output_format not in _TEXT_FORMATS:
@@ -214,73 +305,25 @@ def write_fragment_files(
             f"{sorted(k for k in _TEXT_FORMATS if k)} or 'parquet'"
         )
     fmt = _TEXT_FORMATS[output_format]
-    _check_local_master(routed_with_path, "write_fragment_files")
-
-    def _write_text(rel: str, text: str) -> None:
-        target = _os.path.join(output_dir, rel)
-        _os.makedirs(_os.path.dirname(target), exist_ok=True)
-        with open(target, "w") as f:
-            f.write(text)
-
+    if append and output_format not in LINE_APPENDABLE_FORMATS:
+        raise NotImplementedError(
+            f"cannot append outputFormat {output_format!r}: TriG graph "
+            "blocks and JSON-LD documents are not line-appendable"
+        )
+    src = routed_with_path
+    if fmt == "ntriples":
+        src = forbid_named_graphs(src)
     if fmt in ("nquads", "ntriples"):
-        src = routed_with_path
-        if fmt == "ntriples":
-            src = forbid_named_graphs(src)
         lines = serialize_nquads(src).select("path", "line")
-
-        def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            _write_text(pdf["path"].iloc[0], "\n".join(pdf["line"]) + "\n")
-            return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
-
-        return lines.groupBy("path").applyInPandas(
-            write_group, schema="path string, n_quads long"
-        )
-
+        return _write_sorted_groups(lines, output_dir, _render_lines, append=append)
     if fmt == "trig":
-        # serialize the TRIPLE part of each quad (graph nulled), keep the
-        # graph for block assembly in the group task
-        src = routed_with_path.withColumn("__g", F.col("g")).withColumn(
-            "g", F.lit(None).cast("string")
-        )
-        lines = serialize_nquads(src).select(
-            "path", F.col("__g").alias("g"), "line"
-        )
-
-        def write_trig(pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = list(pdf[pdf["g"].isna()]["line"])
-            for g, grp in pdf[pdf["g"].notna()].groupby("g", sort=True):
-                g = str(g)
-                label = g if g.startswith("_:") else "<" + g + ">"
-                parts.append("GRAPH " + label + " {")
-                parts.extend(grp["line"])
-                parts.append("}")
-            _write_text(pdf["path"].iloc[0], "\n".join(parts) + "\n")
-            return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
-
-        return lines.groupBy("path").applyInPandas(
-            write_trig, schema="path string, n_quads long"
-        )
-
-    # jsonld: per-fragment expanded-form document from the full term tuples
-    cols = ["path", "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang", "g"]
-
-    def write_jsonld(pdf: pd.DataFrame) -> pd.DataFrame:
-        from rdf_dataset_fragmenter_js_spark.sources.jsonld import serialize_jsonld
-
-        def _n(v):  # pandas may surface missing strings as NaN
-            return None if v is None or (isinstance(v, float) and pd.isna(v)) else v
-
-        rows = [
-            (r.s_type, r.s, r.p, r.o_type, r.o, _n(r.o_datatype), _n(r.o_lang), _n(r.g))
-            for r in pdf.itertuples()
-        ]
-        _write_text(pdf["path"].iloc[0], serialize_jsonld(rows))
-        return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
-
-    return (
-        routed_with_path.select(*cols)
-        .groupBy("path")
-        .applyInPandas(write_jsonld, schema="path string, n_quads long")
+        # serialize the TRIPLE part of each quad (graph nulled) and keep
+        # the graph for block assembly
+        src = src.withColumn("__g", F.col("g")).withColumn("g", F.lit(None).cast("string"))
+        lines = serialize_nquads(src).select("path", F.col("__g").alias("g"), "line")
+        return _write_sorted_groups(lines, output_dir, _render_trig)
+    return _write_sorted_groups(
+        src.select("path", *_TERMS), output_dir, _render_jsonld
     )
 
 
@@ -288,45 +331,6 @@ def write_fragment_nquads(routed_with_path: DataFrame, output_dir: str) -> DataF
     """The default reference layout: one N-Quads file per mapped path
     (see :func:`write_fragment_files`)."""
     return write_fragment_files(routed_with_path, output_dir, "application/n-quads")
-
-
-def append_fragment_nquads(routed_with_path: DataFrame, output_dir: str) -> DataFrame:
-    """Like :func:`write_fragment_nquads` but APPENDS to each fragment file
-    — the incremental (eagerFlushing) write shape: every micro-batch adds
-    its quads to the files its docs map to, exactly like the reference's
-    per-file append streams (``ParallelFileWriter.ts:51-69``).
-
-    Same local/shared-filesystem requirement as the overwrite variant.
-    Appends are at-least-once under micro-batch replay (a batch that fails
-    mid-write and restarts re-appends its quads) — the parquet sink path is
-    the exactly-once option."""
-    import os as _os
-
-    import pandas as pd
-
-    from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
-
-    master = routed_with_path.sparkSession.conf.get("spark.master", "")
-    if master and not master.startswith("local"):
-        raise NotImplementedError(
-            "append_fragment_nquads appends per-fragment files via the local "
-            f"filesystem; master={master!r} is not local — use the parquet "
-            "sink (outputFormat='parquet') for non-local deployments"
-        )
-
-    lines = serialize_nquads(routed_with_path).select("path", "line")
-
-    def append_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel = pdf["path"].iloc[0]
-        target = _os.path.join(output_dir, rel)
-        _os.makedirs(_os.path.dirname(target), exist_ok=True)
-        with open(target, "a") as f:
-            f.write("\n".join(pdf["line"]) + "\n")
-        return pd.DataFrame({"path": [rel], "n_quads": [len(pdf)]})
-
-    return lines.groupBy("path").applyInPandas(
-        append_group, schema="path string, n_quads long"
-    )
 
 
 def sink_csv(

@@ -141,14 +141,13 @@ def stream_pipeline_spec(
         )
     from rdf_dataset_fragmenter_js_spark.sinks.paths import (
         LINE_APPENDABLE_FORMATS,
-        TRIPLES_ONLY_FORMATS,
+        write_fragment_files,
     )
 
     out_fmt = sink.get("outputFormat")
     parquet_sink = out_fmt == "parquet"
     # TriG blocks / JSON-LD documents are whole-file structures that
-    # cannot grow by appending lines
-    triples_only = out_fmt in TRIPLES_ONLY_FORMATS
+    # cannot grow by appending lines; reject them before the stream starts
     if not parquet_sink and out_fmt not in LINE_APPENDABLE_FORMATS:
         raise NotImplementedError(
             f"stream_pipeline_spec cannot APPEND outputFormat {out_fmt!r}: "
@@ -172,14 +171,7 @@ def stream_pipeline_spec(
         if parquet_sink:
             with_path.write.mode("append").partitionBy("path").parquet(output_dir)
         else:
-            from rdf_dataset_fragmenter_js_spark.sinks.paths import (
-                append_fragment_nquads,
-                forbid_named_graphs,
-            )
-
-            if triples_only:
-                with_path = forbid_named_graphs(with_path)
-            append_fragment_nquads(with_path, output_dir).collect()
+            write_fragment_files(with_path, output_dir, out_fmt, append=True).collect()
 
     all_nquads = all(k == "nquads" for k in kinds)
 

@@ -248,8 +248,9 @@ def prepare_corpus(
         F.col(stream_col).alias("stream_v"),
     )
     kept = quality_filter(base).where(F.col("keep")).select("doc_id")
+    bench = benchmark.select(F.col(text_col).alias("text"))
     clean = (
-        decontaminate(base, benchmark, n=n)
+        decontaminate(base, bench, n=n)
         .where(~F.col("contaminated"))
         .select("doc_id")
     )

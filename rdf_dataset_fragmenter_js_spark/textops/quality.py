@@ -88,9 +88,11 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def _words_col(text: Column) -> Column:
-    """Whitespace word array (empty text → empty array)."""
-    return F.when(F.trim(text) == "", F.array().cast("array<string>")).otherwise(
-        F.split(F.trim(text), r"\s+")
+    """Whitespace word array (empty or NULL text → empty array, so a NULL
+    document has zero words rather than NULL metrics)."""
+    text = F.trim(F.coalesce(text, F.lit("")))
+    return F.when(text == "", F.array().cast("array<string>")).otherwise(
+        F.split(text, r"\s+")
     )
 
 

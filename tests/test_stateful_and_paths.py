@@ -302,6 +302,123 @@ def test_write_fragment_files_formats_roundtrip(spark, tmp_path):
         write_fragment_files(routed(base, ".nq"), str(tmp_path / "x"), "text/html")
 
 
+@pytest.fixture
+def two_row_arrow_batches(spark):
+    """Arrow batches of two rows, so a fragment's rows span several
+    batches of the writer's Arrow stream."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    yield
+    spark.conf.set(key, old)
+
+
+def _seven_quad_fragment(spark, ext):
+    """Seven quads of subject a (two in a named graph) and one of b, each
+    routed to its subject's document and mapped to ``<subject><ext>``."""
+    from rdf_dataset_fragmenter_js_spark.strategies import route_subject
+
+    rows = [
+        quad("http://ex.org/a", "http://ex.org/p", f"v{i}", o_type="Literal")
+        for i in range(5)
+    ] + [
+        quad("http://ex.org/a", "http://ex.org/q", f"g{i}", o_type="Literal", g="http://g.org/1")
+        for i in range(2)
+    ] + [quad("http://ex.org/b", "http://ex.org/p", "w", o_type="Literal")]
+    return map_doc_to_path(
+        route_subject(quads_df(spark, rows)),
+        {r"^http://ex\.org/": ""},
+        file_extension=ext,
+    )
+
+
+def test_file_sinks_fragment_spans_arrow_batches(spark, tmp_path, two_row_arrow_batches):
+    """A fragment larger than an Arrow batch is still written whole, as one
+    file and one result row, by the N-Quads, TriG and HDT sinks."""
+    from rdf_dataset_fragmenter_js_spark.sinks.hdt import read_hdt, write_fragment_hdt
+    from rdf_dataset_fragmenter_js_spark.sinks.paths import write_fragment_files
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import read_rdf
+
+    out = str(tmp_path / "nq")
+    written = write_fragment_files(_seven_quad_fragment(spark, ".nq"), out).collect()
+    assert sorted((r.path, r.n_quads) for r in written) == [("a.nq", 7), ("b.nq", 1)]
+    lines = (tmp_path / "nq" / "a.nq").read_text().splitlines()
+    assert len(lines) == 7 and len(set(lines)) == 7
+
+    out = str(tmp_path / "trig")
+    written = write_fragment_files(
+        _seven_quad_fragment(spark, ".trig"), out, "application/trig"
+    ).collect()
+    assert sorted((r.path, r.n_quads) for r in written) == [("a.trig", 7), ("b.trig", 1)]
+    back = read_rdf(spark, f"{out}/a.trig").select("o", "g").collect()
+    assert sorted((r.o, r.g) for r in back) == [
+        ("g0", "http://g.org/1"),
+        ("g1", "http://g.org/1"),
+    ] + [(f"v{i}", None) for i in range(5)]
+
+    out = str(tmp_path / "hdt")
+    written = write_fragment_hdt(
+        _seven_quad_fragment(spark, ".nq"), out, file_extension=".nq"
+    ).collect()
+    assert sorted((r.path, r.n_triples) for r in written) == [("a.nq", 7), ("b.nq", 1)]
+    assert len(read_hdt((tmp_path / "hdt" / "a.hdt").read_bytes())) == 7
+
+
+def test_write_fragment_files_append_doubles_lines(spark, tmp_path, two_row_arrow_batches):
+    """append=True adds to the existing files: writing the same frame twice
+    doubles every file's line multiset."""
+    from collections import Counter
+
+    from rdf_dataset_fragmenter_js_spark.sinks.paths import write_fragment_files
+
+    frame = _seven_quad_fragment(spark, ".nq")
+    out = str(tmp_path / "append")
+    write_fragment_files(frame, out, append=True).collect()
+    once = Counter((tmp_path / "append" / "a.nq").read_text().splitlines())
+    write_fragment_files(frame, out, append=True).collect()
+    twice = Counter((tmp_path / "append" / "a.nq").read_text().splitlines())
+    assert sum(once.values()) == 7
+    assert twice == once + once
+    # whole-file formats cannot grow by appending
+    with pytest.raises(NotImplementedError, match="line-appendable"):
+        write_fragment_files(frame, out, "application/trig", append=True)
+
+
+def test_file_sinks_refuse_non_local_master(spark, tmp_path, monkeypatch):
+    """Every per-fragment file writer fails fast, at call time, when
+    executors would write to their own local disks."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from rdf_dataset_fragmenter_js_spark.sinks.hdt import write_fragment_hdt
+    from rdf_dataset_fragmenter_js_spark.sinks.paths import (
+        write_fragment_files,
+        write_fragment_nquads,
+    )
+
+    frame = _seven_quad_fragment(spark, ".nq")
+    out = str(tmp_path / "never")
+    real_get = RuntimeConfig.get
+
+    def cluster_master(self, key, *args, **kwargs):
+        if key == "spark.master":
+            return "spark://cluster:7077"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", cluster_master)
+    writers = [
+        lambda: write_fragment_nquads(frame, out),
+        lambda: write_fragment_files(frame, out, append=True),
+        lambda: write_fragment_hdt(frame, out),
+    ] + [
+        lambda fmt=fmt: write_fragment_files(frame, out, fmt)
+        for fmt in ("application/n-triples", "application/trig", "application/ld+json")
+    ]
+    for write in writers:
+        with pytest.raises(NotImplementedError, match="is not local"):
+            write()
+    assert not (tmp_path / "never").exists()
+
+
 def test_pipeline_spec_turtle_output(spark, tmp_path):
     """outputFormat text/turtle flows through the config compiler."""
     from rdf_dataset_fragmenter_js_spark.plans.pipeline import run_pipeline_spec

@@ -92,6 +92,16 @@ def test_quality_filter_reasons(spark):
     assert out[5]["n_words"] == 20
 
 
+def test_quality_filter_drops_null_text(spark):
+    """A NULL text has zero words, like an empty one: both are dropped as
+    too_few_words instead of every rule comparing NULL and passing."""
+    docs = spark.createDataFrame([(0, None), (1, "")], "doc_id long, text string")
+    out = {r["doc_id"]: r.asDict() for r in Q.quality_filter(docs).collect()}
+    for doc_id in (0, 1):
+        assert out[doc_id]["n_words"] == 0
+        assert (out[doc_id]["reason"], out[doc_id]["keep"]) == ("too_few_words", False)
+
+
 def test_deterministic_sample_matches_hashlib(spark):
     rows = [(i, f"Doc {i} body  text") for i in range(64)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -175,13 +185,12 @@ def test_pack_shards_budget_boundaries(spark):
     assert out[7] == ("de", 9, 0)
 
 
-def test_prepare_corpus_stage_composition(spark):
-    from rdf_dataset_fragmenter_js_spark.textops import corpus as CP
-
+def _corpus_and_benchmark(spark, id_col="doc_id", text_col="text"):
     bw = [f"bm{i:02d}" for i in range(23)] + ["the"]
     d1 = [f"wd{i:02d}" for i in range(23)] + ["the"]
     d3 = [f"zz{i:02d}" for i in range(15)] + bw[0:8] + ["the"]
     d5 = [f"qq{i:02d}" for i in range(23)] + ["the"]
+    schema = f"{id_col} long, lang string, {text_col} string"
     docs = spark.createDataFrame(
         [
             (1, "en", " ".join(d1)),  # survives
@@ -190,12 +199,33 @@ def test_prepare_corpus_stage_composition(spark):
             (4, "en", "the cat"),  # fails quality (too few words)
             (5, "en", " ".join(d5)),  # survives, second shard at budget 20
         ],
-        "doc_id long, lang string, text string",
+        schema,
     )
-    bench = spark.createDataFrame([(100, "en", " ".join(bw))], docs.schema)
+    return docs, spark.createDataFrame([(100, "en", " ".join(bw))], schema)
+
+
+def test_prepare_corpus_stage_composition(spark):
+    from rdf_dataset_fragmenter_js_spark.textops import corpus as CP
+
+    docs, bench = _corpus_and_benchmark(spark)
     out = {
         r["doc_id"]: (r["stream"], r["n_tokens"], r["shard_id"])
         for r in CP.prepare_corpus(docs, bench, budget_tokens=20).collect()
+    }
+    assert out == {1: ("en", 24, 0), 5: ("en", 24, 1)}
+
+
+def test_prepare_corpus_custom_column_names(spark):
+    """id_col/text_col name the columns of the benchmark as well as of the
+    corpus."""
+    from rdf_dataset_fragmenter_js_spark.textops import corpus as CP
+
+    docs, bench = _corpus_and_benchmark(spark, id_col="page", text_col="body")
+    out = {
+        r["doc_id"]: (r["stream"], r["n_tokens"], r["shard_id"])
+        for r in CP.prepare_corpus(
+            docs, bench, budget_tokens=20, id_col="page", text_col="body"
+        ).collect()
     }
     assert out == {1: ("en", 24, 0), 5: ("en", 24, 1)}
 
@@ -267,7 +297,7 @@ def test_redact_pii_patterns(spark):
             (0, "mail a.b+c@sub.example.org and d@e.io now"),
             (1, "hosts 10.0.0.1 and 192.168.255.3, call +44-207-946-0958"),
             (2, "clean text with no pii at all"),
-            (3, "v1.2.3.4 is a version-ish string"),  # \b makes it match
+            (3, "v1.2.3.4 is a version-ish string"),  # no \b between v and 1: no match
             (4, "+1-555-123-4567 +999-111-222-3333"),
         ],
         "doc_id long, text string",
