@@ -1408,7 +1408,7 @@ def _canonical_mapping_oracle() -> str:
         "regexp_replace(lower({c}), '[^a-z ]', '', 'g'), ' '), t -> len(t) > 1), ' ')"
     )
     # trigrams over the normalized form INCLUDING spaces (matches
-    # textops.dedup.char_shingles: positions 1..max(len-2, 1))
+    # textops.dedup.shingle_set: positions 1..max(len-2, 1))
     grams = (
         "(SELECT array_agg(DISTINCT substring({n}, g, 3)) "
         "FROM unnest(generate_series(1, greatest(length({n}) - 2, 1))) t(g))"

@@ -1,5 +1,6 @@
 """Benchmark harness. Runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on) and prints ONE
 JSON line: {"metric", "value", "unit", "queries", "sf", ...}.
 
 The headline metric is KG-pipeline throughput (triples/sec) over the
@@ -17,6 +18,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools.host import host_cpus, host_mem_gb  # noqa: E402
 
 #: pages per unit sf — sf0.1 → 1,000,000 pages (~2M triples). Sized so the
 #: timed pipeline is dominated by parallel extraction/canonicalization work,
@@ -60,7 +63,11 @@ def build_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # half the host: the driver JVM is the only large process
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(host_mem_gb() // 2, 1)}g"),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # measured sweep at local[32] (BENCH.md "8→32 deep-dive"): 20000
@@ -126,7 +133,7 @@ def kg_throughput(spark, sf: float) -> tuple[float, int, float]:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     spark = build_spark(cpus)

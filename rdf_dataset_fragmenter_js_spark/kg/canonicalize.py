@@ -7,11 +7,11 @@ Pipeline (north rule: "salted groupBy + MinHash/connected-components"):
    ``salt = md5(surface) % SALTS`` so one hot surface form ("Acme Corp" on
    half the web) never lands on a single reducer; partial aggregates merge
    in a second, tiny groupBy over at most SALTS rows per key;
-3. MinHash-LSH over name character shingles to produce candidate pairs of
-   *different* normalized forms that are likely the same entity
-   ("alice johnson" ~ "alice r johnson");
-4. connected components over candidate pairs (iterative min-label
-   propagation) → cluster id = lexicographic min normalized form;
+3. token blocking (first + last token of the normalized form) produces
+   candidate pairs of *different* normalized forms, verified by character
+   trigram containment ("diaz" ⊂ "carol diaz");
+4. connected components over verified pairs → cluster representative =
+   longest member, ties lexicographic;
 5. entity id = cluster representative, slugged.
 """
 
@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf_dataset_fragmenter_js_spark.textops.dedup import near_dup_clusters
+from rdf_dataset_fragmenter_js_spark.kg.link import token_blocks
+from rdf_dataset_fragmenter_js_spark.textops.dedup import (
+    _pair_scores,
+    containment_bp,
+    near_dup_clusters,
+)
 
 SALTS = 64
 
@@ -28,18 +33,11 @@ SALTS = 64
 def ngram_containment_pairs(
     docs: DataFrame, candidates: DataFrame, shingle_size: int = 3
 ) -> DataFrame:
-    """Char n-gram containment |A∩B| / min(|A|,|B|) for candidate pairs,
-    scaled to basis points (exact integer arithmetic). Rides the shared
-    persisted-shingle skeleton (textops/dedup.py:shingle_overlap_pairs),
-    so the explode+distinct runs once, not once per plan branch."""
-    from rdf_dataset_fragmenter_js_spark.textops.dedup import shingle_overlap_pairs
-
-    return shingle_overlap_pairs(
-        docs,
-        candidates,
-        shingle_size,
-        lambda inter, na, nb: F.floor(inter * 10000 / F.least(na, nb)),
-        "containment_bp",
+    """Char n-gram containment (:func:`~.dedup.containment_bp`) for
+    candidate pairs → (doc_a, doc_b, containment_bp); pairs with no shared
+    n-gram give no row."""
+    return _pair_scores(
+        docs, candidates, shingle_size, containment_bp, "containment_bp", "doc_id", "text"
     )
 
 
@@ -77,7 +75,7 @@ def surface_counts(mentions: DataFrame, surface_col: str = "surface") -> DataFra
 
 
 def _shingles3(s: str) -> set:
-    """Driver-side char-trigram set, identical to ``char_shingles(n=3)``
+    """Driver-side char-trigram set, identical to ``shingle_set(s, 3)``
     (positions 1..max(len-2, 1) → short strings yield themselves)."""
     return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}
 
@@ -196,13 +194,7 @@ def canonical_mapping(
                 mentions.sparkSession, [r[0] for r in sample], containment_threshold
             )
     docs = forms.select(F.col("norm").alias("doc_id"), F.col("norm").alias("text"))
-    toks = F.split(F.col("doc_id"), " ")
-    blocked = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.array(F.element_at(toks, 1), F.element_at(toks, -1)))
-        ).alias("block"),
-    )
+    blocked = docs.select("doc_id", F.explode(token_blocks(F.col("doc_id"))).alias("block"))
     a = blocked.select(F.col("doc_id").alias("doc_a"), "block")
     b = blocked.select(F.col("doc_id").alias("doc_b"), "block")
     pairs = (

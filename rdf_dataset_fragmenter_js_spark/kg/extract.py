@@ -1,5 +1,5 @@
-"""Extraction stages: HTML → text (byte-exact), mention detection,
-entity-link scoring, OpenIE-style triple extraction.
+"""Extraction stages: HTML → text (byte-exact) and OpenIE-style triple
+extraction, whose subject/object surfaces are the entity mentions.
 
 All stages are Arrow-batched ``mapInPandas`` / pandas UDFs operating on
 whole record batches with vectorized pandas string ops — the designated
@@ -27,10 +27,6 @@ from pyspark.sql import functions as F
 # block with tags stripped and HTML entities unescaped.
 _ARTICLE_RE = re.compile(rb"<article>(.*?)</article>", re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
-
-#: mention: capitalized word runs, allowing embedded initials ("A. Johnson",
-#: "Alice R. Johnson").
-MENTION_RE = re.compile(r"\b(?:[A-Z][a-z]+|[A-Z]\.)(?:\s+(?:[A-Z][a-z]+|[A-Z]\.))*\b")
 
 #: closed predicate lexicon for SVO extraction (slug, phrase)
 PREDICATE_LEXICON = [
@@ -76,32 +72,6 @@ def extract_text(pages: DataFrame) -> DataFrame:
             yield out
 
     return pages.mapInPandas(batches, schema=schema)
-
-
-def detect_mentions(texts: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """(url, mention, m_pos) rows via vectorized ``str.findall``."""
-    schema = "url string, mention string, m_pos long"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            found = pdf[text_col].map(
-                lambda t: [(m.group(0), m.start()) for m in MENTION_RE.finditer(t or "")]
-            )
-            exploded = pdf[["url"]].assign(m=found).explode("m").dropna(subset=["m"])
-            if len(exploded) == 0:
-                yield pd.DataFrame({"url": [], "mention": [], "m_pos": []}).astype(
-                    {"url": object, "mention": object, "m_pos": "int64"}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "url": exploded["url"].to_numpy(),
-                    "mention": [m[0] for m in exploded["m"]],
-                    "m_pos": [m[1] for m in exploded["m"]],
-                }
-            )
-
-    return texts.mapInPandas(batches, schema=schema)
 
 
 def extract_triples(texts: DataFrame, text_col: str = "extracted_text") -> DataFrame:

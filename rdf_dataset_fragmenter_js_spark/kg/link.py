@@ -1,8 +1,9 @@
 """Entity-link scoring: mention surface → best canonical entity.
 
 North-rule stage ("batched mention detection and entity-link scoring"):
-mentions detected by :func:`kg.extract.detect_mentions` are scored against a
-candidate entity catalog and linked to the argmax above a threshold.
+mention surfaces (e.g. the subject/object surfaces of
+:func:`kg.extract.extract_triples`) are scored against a candidate entity
+catalog and linked to the argmax above a threshold.
 
 All scoring is pure Column expressions (character-trigram Jaccard in basis
 points — exact integer arithmetic, engine-portable for the oracle gate);
@@ -18,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rdf_dataset_fragmenter_js_spark.textops.dedup import jaccard_bp, shingle_set
+
 
 def name_norm_col(col: Column) -> Column:
     """lowercase, strip non-alpha (spaces kept), single-space join of
@@ -27,24 +30,19 @@ def name_norm_col(col: Column) -> Column:
     return F.array_join(toks, " ")
 
 
-def _grams3(col: Column) -> Column:
-    """Distinct character trigrams of the space-stripped normalized form
-    (short strings yield themselves)."""
-    c = F.regexp_replace(col, " ", "")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - 2, F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda p: F.substring(c, p, 3)))
-
-
 def trigram_jaccard_bp_col(a: Column, b: Column) -> Column:
-    """Trigram Jaccard |A∩B| / |A∪B| scaled to basis points with floor —
-    exact integer arithmetic, identical in every engine."""
-    ga, gb = _grams3(a), _grams3(b)
-    inter = F.size(F.array_intersect(ga, gb))
-    union = F.size(F.array_union(ga, gb))
-    return F.floor(inter * 10000 / F.greatest(union, F.lit(1))).cast("long")
+    """Trigram Jaccard of the space-stripped normalized forms in basis
+    points (:func:`~.dedup.jaccard_bp`)."""
+    return jaccard_bp(
+        shingle_set(F.regexp_replace(a, " ", ""), 3),
+        shingle_set(F.regexp_replace(b, " ", ""), 3),
+    )
 
 
-def _blocks(norm: Column) -> Column:
+def token_blocks(norm: Column) -> Column:
+    """Blocking keys of a normalized form: its first and last token
+    (abbreviation aliases always share one). Shared by entity linking and
+    canonicalization."""
     toks = F.split(norm, " ")
     return F.array_distinct(F.array(F.element_at(toks, 1), F.element_at(toks, -1)))
 
@@ -78,8 +76,8 @@ def link_mentions(
     ).filter(F.col("e_norm") != "")
 
     if block:
-        mb = m.withColumn("block", F.explode(_blocks(F.col("m_norm"))))
-        eb = e.withColumn("block", F.explode(_blocks(F.col("e_norm"))))
+        mb = m.withColumn("block", F.explode(token_blocks(F.col("m_norm"))))
+        eb = e.withColumn("block", F.explode(token_blocks(F.col("e_norm"))))
         pairs = mb.join(eb, on="block").drop("block").dropDuplicates(
             ["mention", "entity_id"]
         )

@@ -5,7 +5,7 @@ DataFrame plans:
 
 * exact duplicates — hash-groupBy on md5(text); one shuffle, map-side
   partial aggregation;
-* MinHash + LSH — char-shingles → k salted-md5 minima → banded signatures →
+* MinHash + LSH — shingle set → k salted-md5 minima → banded signatures →
   bucket self-join (candidates only meet inside a bucket: the join key is
   the band hash, so the shuffle is ~linear in data size, never the
   quadratic all-pairs);
@@ -15,16 +15,19 @@ DataFrame plans:
   two-stage near-dup pipeline: LSH recall, Jaccard precision);
 * embedding cosine near-dup — see similarity.py.
 
-At 100 TB: every stage is shuffle-bounded by (doc count × k) small rows;
-shingle explosion happens inside a single stage and is reduced by the
-min() aggregate before any shuffle leaves the map side.
+One shingle-set core serves every char n-gram score in the package:
+:func:`shingle_set` is the only definition of n-gram positions, and
+:func:`jaccard_bp` / :func:`containment_bp` score two sets in basis points.
+MinHash explodes the set and reduces it with min() before any shuffle
+leaves the map side; pair verification shingles only the documents its
+candidate pairs name, one array per document.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
@@ -44,27 +47,36 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def char_shingles(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    distinct: bool = True,
-) -> DataFrame:
-    """Char n-gram shingles per document (doc_id, shingle). ``distinct=True``
-    dedups shingles per doc (one full shuffle of the exploded set) — needed
-    for exact Jaccard set semantics; pass ``distinct=False`` for consumers
-    that aggregate with duplicate-insensitive functions (min/max), which
-    skips that shuffle entirely."""
-    positions = F.sequence(
-        F.lit(1), F.greatest(F.length(F.col(text_col)) - (n - 1), F.lit(1))
-    )
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(positions).alias("pos"),
-        F.col(text_col),
-    ).select("doc_id", F.substring(F.col(text_col), F.col("pos"), n).alias("shingle"))
-    return sh.distinct() if distinct else sh
+def shingle_set(text: Column, n: int) -> Column:
+    """Distinct char n-grams of ``text`` as an array — the one definition of
+    n-gram positions (1..max(len-n+1, 1), so text shorter than n yields
+    itself). A NULL text yields ``[NULL]``, never a NULL array, so ``size``
+    of a set is never NULL, also under ANSI."""
+    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(1)))
+    return F.array_distinct(F.transform(positions, lambda p: F.substring(text, p, n)))
+
+
+def _overlap(a: Column, b: Column) -> Column:
+    """|A∩B| over two shingle sets, as a long. A NULL shingle shares
+    nothing: it stands for unknown text."""
+    return F.size(F.array_compact(F.array_intersect(a, b))).cast("long")
+
+
+def jaccard_bp(a: Column, b: Column) -> Column:
+    """Jaccard |A∩B| / |A∪B| of two shingle sets in basis points, floored —
+    pure integer arithmetic, identical across engines (decimal round() is
+    not: Spark rounds the shortest decimal string HALF_UP, DuckDB rounds the
+    binary double)."""
+    inter = _overlap(a, b)
+    return F.floor(inter * 10000 / (F.size(a) + F.size(b) - inter)).cast("long")
+
+
+def containment_bp(a: Column, b: Column) -> Column:
+    """Containment |A∩B| / min(|A|,|B|) of two shingle sets in basis
+    points, floored."""
+    return F.floor(
+        _overlap(a, b) * 10000 / F.least(F.size(a), F.size(b))
+    ).cast("long")
 
 
 def minhash_signatures(
@@ -78,12 +90,12 @@ def minhash_signatures(
     salting — ``min(md5(i || ':' || shingle))`` (lexicographic min of hex
     digests ≡ min over a random permutation of shingle space). Returns
     (doc_id, mh_0..mh_{k-1}). One explode + one groupBy; the min() combines
-    map-side so the shuffle carries k×32 bytes per doc. Shingles are NOT
-    deduplicated first: min over the shingle multiset equals min over the
-    set, so the per-doc distinct (a full shuffle of the exploded shingle
-    rows) is skipped entirely."""
-    sh = char_shingles(
-        docs, n=shingle_size, id_col=id_col, text_col=text_col, distinct=False
+    map-side so the shuffle carries k×32 bytes per doc. The exploded
+    :func:`shingle_set` is deduplicated inside its row, so no shuffle of
+    shingle rows is needed."""
+    sh = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(shingle_set(F.col(text_col), shingle_size)).alias("shingle"),
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")).cast("binary"))).alias(f"mh_{i}")
@@ -167,50 +179,48 @@ def lsh_candidate_pairs(
     return pairs
 
 
-def shingle_overlap_pairs(
+def _pair_scores(
     docs: DataFrame,
     candidates: DataFrame,
     shingle_size: int,
-    score_col,
+    score,
     score_name: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str,
+    text_col: str,
 ) -> DataFrame:
-    """Shared skeleton for exact char-shingle overlap scores on candidate
-    pairs: (doc_a, doc_b, inter, na, nb) → ``score_col(...)`` as
-    ``score_name``. The shingle set feeds three plan branches (sizes,
-    a-side, b-side); it is persisted so the explode+distinct runs once,
-    the pair-sized result is checkpointed, and the cache is released —
-    both the Jaccard verifier here and the containment scorer in
-    ``kg/canonicalize.py`` ride this one implementation."""
-    sh = char_shingles(docs, n=shingle_size, id_col=id_col, text_col=text_col).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
-    b_sh = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
-    inter = (
-        candidates.join(a_sh, on="doc_a")
-        .join(b_sh, on=["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    """``score(sa, sb)`` as ``score_name`` for each (doc_a, doc_b) candidate
+    row whose shingle sets overlap. Only the documents named in a pair are
+    shingled, one array per doc_id (rows sharing an id union their sets);
+    the array is joined to both sides of each pair. Pairs with no shared
+    shingle give no row. The pair-sized result is checkpointed so callers
+    that read it twice do not re-run the scoring."""
+    ids = candidates.select(F.col("doc_a").alias("doc_id")).union(
+        candidates.select(F.col("doc_b").alias("doc_id"))
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    out = (
-        inter.join(na, on="doc_a")
-        .join(nb, on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            score_col(F.col("inter"), F.col("na"), F.col("nb"))
-            .cast("long")
-            .alias(score_name),
+    # texts travel wrapped in a struct: collect_list drops a NULL value but
+    # keeps a struct holding one, and a NULL text still counts in |A|
+    sets = (
+        docs.select(F.col(id_col).alias("doc_id"), F.struct(F.col(text_col).alias("t")).alias("r"))
+        .join(ids, on="doc_id", how="left_semi")
+        .groupBy("doc_id")
+        .agg(
+            F.array_distinct(
+                F.flatten(
+                    F.transform(F.collect_list("r"), lambda r: shingle_set(r["t"], shingle_size))
+                )
+            ).alias("sh")
         )
     )
-    # materialize the (pair-sized) scores, then release the shingle cache —
-    # no session-lifetime persist leak across repeated calls
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    return out
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb"))
+    return (
+        candidates.select("doc_a", "doc_b")
+        .join(a, on="doc_a")
+        .join(b, on="doc_b")
+        .filter(_overlap(F.col("sa"), F.col("sb")) > 0)
+        .select("doc_a", "doc_b", score(F.col("sa"), F.col("sb")).alias(score_name))
+        .localCheckpoint(eager=True)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -220,18 +230,10 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact Jaccard over char-shingle sets for candidate pairs, scaled to
-    basis points via pure integer arithmetic — exact and identical across
-    engines (decimal round() is not: Spark rounds the shortest decimal
-    string HALF_UP, DuckDB rounds the binary double)."""
-    return shingle_overlap_pairs(
-        docs,
-        candidates,
-        shingle_size,
-        lambda inter, na, nb: F.floor(inter * 10000 / (na + nb - inter)),
-        "jaccard_bp",
-        id_col=id_col,
-        text_col=text_col,
+    """Exact char-shingle Jaccard (:func:`jaccard_bp`) for candidate pairs →
+    (doc_a, doc_b, jaccard_bp); pairs with no shared shingle give no row."""
+    return _pair_scores(
+        docs, candidates, shingle_size, jaccard_bp, "jaccard_bp", id_col, text_col
     )
 
 

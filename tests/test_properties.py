@@ -82,6 +82,62 @@ def test_normalize_surface_column_vs_driver_python(spark):
     assert got == want
 
 
+def _shingles_py(text, n):
+    """Plain-Python char n-gram set; a NULL text is the one unknown shingle."""
+    if text is None:
+        return {None}
+    return {text[i : i + n] for i in range(max(len(text) - n + 1, 1))}
+
+
+def test_pair_scores_match_python_sets(spark):
+    """ngram_jaccard_pairs / ngram_containment_pairs == a plain-Python set
+    oracle on NULL text, text shorter than n, repeated shingles, duplicate
+    ids (their sets union) and zero-overlap pairs (no row). The NULL/NULL
+    pair (ids 900, 901) must give no row: a NULL shingle shares nothing,
+    although size(array_intersect([NULL], [NULL])) is 1."""
+    from rdf_dataset_fragmenter_js_spark.kg.canonicalize import ngram_containment_pairs
+    from rdf_dataset_fragmenter_js_spark.textops.dedup import ngram_jaccard_pairs
+
+    n = 3
+    rng = random.Random(11)
+    docs = [
+        (str(rng.randint(0, 40)), None if rng.random() < 0.1 else "".join(
+            rng.choice("ab é") for _ in range(rng.randint(0, 9))
+        ))
+        for _ in range(120)
+    ]
+    docs += [("900", None), ("901", None), ("902", "aaaaaa"), ("903", "bbbbbb"), ("904", "aaab")]
+    ids = sorted({d for d, _ in docs}) + ["missing"]
+    cands = sorted(
+        {(a, b) for a in ids for b in ids if a < b and rng.random() < 0.2}
+        | {("900", "901"), ("902", "903"), ("902", "904"), ("904", "missing")}
+    )
+    sets: dict[str, set] = {}
+    for d, t in docs:
+        sets.setdefault(d, set()).update(_shingles_py(t, n))
+
+    def want(score):
+        out = set()
+        for a, b in cands:
+            if a in sets and b in sets:
+                sa, sb = sets[a], sets[b]
+                inter = len((sa & sb) - {None})
+                if inter:
+                    out.add((a, b, score(inter, len(sa), len(sb))))
+        return out
+
+    docs_df = spark.createDataFrame(docs, "doc_id string, text string")
+    cands_df = spark.createDataFrame(cands, "doc_a string, doc_b string")
+    jac = {tuple(r) for r in ngram_jaccard_pairs(docs_df, cands_df, shingle_size=n).collect()}
+    con = {
+        tuple(r) for r in ngram_containment_pairs(docs_df, cands_df, shingle_size=n).collect()
+    }
+    assert jac == want(lambda i, na, nb: i * 10000 // (na + nb - i))
+    assert con == want(lambda i, na, nb: i * 10000 // min(na, nb))
+    assert not {r[:2] for r in jac} & {("900", "901"), ("902", "903")}
+    assert ("902", "904") in {r[:2] for r in con}
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     base=st.lists(

@@ -18,6 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from tools.host import host_cpus, host_mem_gb
+
 
 def norm_value(v):
     if v is None:
@@ -44,14 +46,16 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    mem_gb = max(host_mem_gb() // 4, 1)
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', host_cpus())}]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         # collect()-side heap: the sf1 evidence run (tools/make_bigsf.py)
         # pulls up to ~28M oracle rows through the driver
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # the Spark driver and DuckDB share the host: a quarter of it each
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{mem_gb}g"))
         .getOrCreate()
     )
 
@@ -62,7 +66,7 @@ def main():
     # with the Spark driver, and one heavyweight oracle plan can OOM-kill
     # the whole gate process (observed at sf1). With a cap it spills to disk
     # and finishes instead.
-    con.execute(f"SET memory_limit='{os.environ.get('SPARK_GRAFT_DUCKDB_MEM', '48GB')}'")
+    con.execute(f"SET memory_limit='{os.environ.get('SPARK_GRAFT_DUCKDB_MEM', f'{mem_gb}GB')}'")
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
     for t in [
         "region", "nation", "customer", "supplier", "part",
