@@ -122,9 +122,9 @@ def kg_throughput(spark, sf: float) -> tuple[float, int, float]:
     t0 = time.time()
     # skew_salt=4: this corpus's fragment keys are the closed canonical-
     # entity pool (all hot), where salt=4 measured 1.77x faster than the
-    # safe default salt=1 and salt=8 over-shards (BENCH.md "Skew A/B",
-    # tools/skew_bench.py) — the knob applied exactly as a cluster user
-    # would tune it for a known-skewed corpus.
+    # safe default salt=1 and salt=8 over-shards (BENCH.md "Skew A/B") —
+    # the knob applied exactly as a cluster user would tune it for a
+    # known-skewed corpus.
     frag_metrics = fragment_and_write(quads, out, skew_salt=4)
     frag_sec = time.time() - t0
     frag_metrics["total_sec"] = round(frag_sec, 3)

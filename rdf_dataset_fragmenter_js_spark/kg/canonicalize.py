@@ -20,12 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_dataset_fragmenter_js_spark.graph import connected_components, union_find
 from rdf_dataset_fragmenter_js_spark.kg.link import token_blocks
-from rdf_dataset_fragmenter_js_spark.textops.dedup import (
-    _pair_scores,
-    containment_bp,
-    near_dup_clusters,
-)
+from rdf_dataset_fragmenter_js_spark.textops.dedup import _pair_scores, containment_bp
 
 SALTS = 64
 
@@ -110,42 +107,20 @@ def _canonical_mapping_driver_dict(
         members = sorted(set(members))
         pairs.update(itertools.combinations(members, 2))
     sh = {f: _shingles3(f) for f in forms}
-    parent: dict[str, str] = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        inter = len(sh[a] & sh[b])
-        bp = inter * 10000 // min(len(sh[a]), len(sh[b]))
-        if bp >= threshold_bp:
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
+    verified = (
+        (a, b)
+        for a, b in pairs
+        if len(sh[a] & sh[b]) * 10000 // min(len(sh[a]), len(sh[b])) >= threshold_bp
+    )
     clusters: dict[str, list[str]] = {}
-    for f in parent:
-        clusters.setdefault(find(f), []).append(f)
+    for f, root in union_find(verified).items():
+        clusters.setdefault(root, []).append(f)
     rows = []
     for members in clusters.values():
         rep = min(members, key=lambda m: (-len(m), m))
         rows.extend((m, rep) for m in members)
     mapped = dict(rows)
     return {f: mapped.get(f, f).replace(" ", "_") for f in forms}
-
-
-def _canonical_mapping_driver(
-    spark, forms: list[str], containment_threshold: float
-) -> DataFrame:
-    """DataFrame wrapper over :func:`_canonical_mapping_driver_dict`."""
-    out = list(_canonical_mapping_driver_dict(forms, containment_threshold).items())
-    return spark.createDataFrame(out, "norm string, canonical_id string")
 
 
 def canonical_mapping(
@@ -168,8 +143,8 @@ def canonical_mapping(
     pair join happens inside blocks only. An alternative MinHash-LSH
     candidate path is available in textops.dedup for longer texts.
 
-    Two physical strategies behind one API (same split as
-    ``textops.dedup.near_dup_clusters``): the distinct normalized forms are
+    Two physical strategies behind one API (the same size split as every
+    closure in ``graph``): the distinct normalized forms are
     a *vocabulary*, orders of magnitude smaller than the mention stream. At
     ≤ ``driver_threshold`` forms the blocking/containment/CC steps run as
     plain Python on the driver — the DataFrame path costs ~10 tiny jobs
@@ -190,8 +165,9 @@ def canonical_mapping(
     if driver_threshold:
         sample = forms.limit(driver_threshold + 1).collect()
         if len(sample) <= driver_threshold:
-            return _canonical_mapping_driver(
-                mentions.sparkSession, [r[0] for r in sample], containment_threshold
+            out = _canonical_mapping_driver_dict([r[0] for r in sample], containment_threshold)
+            return mentions.sparkSession.createDataFrame(
+                list(out.items()), "norm string, canonical_id string"
             )
     docs = forms.select(F.col("norm").alias("doc_id"), F.col("norm").alias("text"))
     blocked = docs.select("doc_id", F.explode(token_blocks(F.col("doc_id"))).alias("block"))
@@ -206,7 +182,7 @@ def canonical_mapping(
     verified = ngram_containment_pairs(docs, pairs, shingle_size=3).filter(
         F.col("containment_bp") >= int(containment_threshold * 10000)
     )
-    clusters = near_dup_clusters(verified.select("doc_a", "doc_b"))
+    clusters = connected_components(verified.select("doc_a", "doc_b"))
     # cluster representative = LONGEST member (most specific surface form),
     # ties broken lexicographically — 'emma brown' represents {'emma brown',
     # 'brown'}, not the abbreviation.

@@ -15,64 +15,25 @@ Reference semantics (``lib/strategy/FragmentationBlankNodeBuffer.ts``):
 * bnodes that never acquire a named owner are dropped with a warning
   (:111-120).
 
-Spark design: ownership is a small transitive closure computed with an
-iterative join loop (frontier semi-join style, ``localCheckpoint`` per
-iteration to cut lineage). Chains in real RDF data are short (lists,
-reification), so the loop converges in a handful of iterations; each
-iteration is a broadcast-friendly join because the link table is tiny
-relative to the quad table. At 100 TB the quad scan happens once — only the
-(bnode, owner) link table iterates.
+Spark design: ownership is multi-source reachability over the small
+(bnode, owner) link table, computed by ``graph.reachable_owners``
+— a driver worklist for small link tables, else a semi-naive frontier join
+with ``localCheckpoint`` per round. Like the reference's fixpoint, neither
+has a depth limit: a chain of any length gets every owner. At 100 TB the
+quad scan happens once — only the link table iterates.
 """
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf_dataset_fragmenter_js_spark.graph import reachable_owners
 from rdf_dataset_fragmenter_js_spark.quads import BLANK_NODE, NAMED_NODE
-
-logger = logging.getLogger(__name__)
-
-#: Safety bound; real chains are list-shaped and short.
-MAX_ITERATIONS = 50
 
 
 def _is(df_col: Column, term_type: str) -> Column:
     return df_col == term_type
-
-
-def _closure_driver(
-    b_rows, e_rows, max_iterations: int = MAX_ITERATIONS
-) -> list[tuple[str, str]]:
-    """Driver-side ownership closure (owners propagate along src→dst edges)
-    — identical semantics to the distributed loop, including the same
-    propagation-depth cap (one edge-hop per 'iteration') and warning, so a
-    >max_iterations-deep chain behaves identically on both paths."""
-    from collections import defaultdict, deque
-
-    own: dict[str, set] = defaultdict(set)
-    for b, o in b_rows:
-        own[b].add(o)
-    adj: dict[str, list] = defaultdict(list)
-    for s, d in e_rows:
-        adj[s].append(d)
-    queue = deque((b, 0) for b in list(own.keys()))
-    capped = False
-    while queue:
-        b, depth = queue.popleft()
-        if depth >= max_iterations:
-            capped = True
-            continue
-        for d in adj.get(b, ()):
-            new = own[b] - own[d]
-            if new:
-                own[d] |= new
-                queue.append((d, depth + 1))
-    if capped:
-        logger.warning("bnode ownership did not converge in %d iterations", max_iterations)
-    return [(b, o) for b, owners in own.items() for o in owners]
 
 
 def bnode_owners(
@@ -81,7 +42,6 @@ def bnode_owners(
     key_type: str,
     value: str,
     value_type: str,
-    max_iterations: int = MAX_ITERATIONS,
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Compute the distinct (bnode, owner) ownership table.
@@ -89,23 +49,24 @@ def bnode_owners(
     ``key``/``value`` are quad column names (e.g. ``"s"``/``"o"`` for the
     subject strategy). Returns DataFrame[bnode: string, owner: string].
 
-    Two physical strategies (same split as ``near_dup_clusters`` /
-    ``canonical_mapping``): link tables ≤ ``driver_threshold`` rows are
-    collected and closed on the driver in plain Python — the distributed
-    loop costs ~3 jobs of fixed scheduling per iteration, which dwarfs the
-    BFS on small link sets. Above the threshold, the iterative
-    frontier-join loop runs (the 100 TB path: only the link table iterates,
-    never the quads). Measured crossover (BENCH.md "Distributed-path
-    timings"): on pre-materialized link tables the distributed loop edges
-    out the driver BFS at ~300k links, but inside the full routing query
-    the two paths tie at that size (A/B, warm: 16.4 s vs 16.5 s) — the
+    Two physical strategies, chosen in ``graph.reachable_owners`` by the
+    same size split as every closure in ``graph``: link tables ≤
+    ``driver_threshold`` rows are collected and closed by a driver
+    worklist — the distributed loop costs ~3 jobs of fixed scheduling per
+    round, which dwarfs the worklist on small link sets. Above the
+    threshold, the semi-naive frontier join runs (the 100 TB path: only the
+    link table iterates, never the quads). Neither has a depth limit.
+    Measured crossover (BENCH.md "Distributed-path timings"): on
+    pre-materialized link tables the distributed loop edges out the driver
+    BFS at ~300k links, but inside the full routing query the two paths tie
+    at that size (A/B, warm: 16.4 s vs 16.5 s) — the
     1M default keeps the simpler path where it is not measurably worse."""
     # Both link tables come out of ONE pass over the quads (they share the
     # bnode-valued filter and differ only in the key's term type), so the
     # quad-generation plan materializes exactly once into one checkpoint;
     # base/edges are projections over the materialized rows, the threshold
     # probe and driver transfer read them directly, and the distributed
-    # loop re-joins `edges` every iteration without re-deriving the quads.
+    # loop re-joins `edges` every round without re-deriving the quads.
     links = (
         quads.filter(_is(F.col(value_type), BLANK_NODE))
         .select(
@@ -124,47 +85,7 @@ def bnode_owners(
     edges = links.filter(_is(F.col("__kt"), BLANK_NODE)).select(
         F.col("__k").alias("src"), F.col("__v").alias("dst")
     )
-
-    if driver_threshold:
-        # Cheap count probes first — an over-threshold table costs one
-        # count job against the checkpoint, never a multi-hundred-MB driver
-        # transfer. Under threshold: Arrow-batched toPandas both ways (and
-        # a pandas-backed createDataFrame back) — columnar batches, not
-        # py4j Row objects.
-        if base.limit(driver_threshold + 1).count() <= driver_threshold:
-            if edges.limit(driver_threshold + 1).count() <= driver_threshold:
-                import pandas as pd
-
-                b_pdf = base.toPandas()
-                e_pdf = edges.toPandas()
-                pairs = _closure_driver(
-                    list(zip(b_pdf["bnode"], b_pdf["owner"])),
-                    list(zip(e_pdf["src"], e_pdf["dst"])),
-                    max_iterations=max_iterations,
-                )
-                spark = quads.sparkSession
-                if not pairs:
-                    return spark.createDataFrame([], "bnode string, owner string")
-                out = pd.DataFrame(pairs, columns=["bnode", "owner"])
-                return spark.createDataFrame(out)
-
-    owners = base
-    frontier = owners
-    for _ in range(max_iterations):
-        grown = (
-            frontier.join(edges, frontier["bnode"] == edges["src"])
-            .select(F.col("dst").alias("bnode"), F.col("owner"))
-            .distinct()
-            .join(owners, on=["bnode", "owner"], how="left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if grown.isEmpty():
-            break
-        owners = owners.unionByName(grown).localCheckpoint(eager=True)
-        frontier = grown
-    else:
-        logger.warning("bnode ownership did not converge in %d iterations", max_iterations)
-    return owners
+    return reachable_owners(base, edges, driver_threshold)
 
 
 def route_bnode_quads(

@@ -13,6 +13,8 @@ DataFrame plans:
   blocking key;
 * n-gram Jaccard — exact verification on LSH candidates (the classic
   two-stage near-dup pipeline: LSH recall, Jaccard precision);
+* near-dup clusters — :func:`near_dup_clusters`, a re-export of
+  ``graph.connected_components``;
 * embedding cosine near-dup — see similarity.py.
 
 One shingle-set core serves every char n-gram score in the package:
@@ -25,12 +27,13 @@ candidate pairs name, one array per document.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+# re-exported: dedup callers cluster verified pairs as D.near_dup_clusters
+from rdf_dataset_fragmenter_js_spark.graph import (  # noqa: F401
+    connected_components as near_dup_clusters,
+)
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -267,113 +270,3 @@ def simhash16(
     return bits.groupBy("doc_id").agg(*aggs).select(
         "doc_id", F.concat(*[F.col(f"sb_{b}") for b in range(16)]).alias("simhash")
     )
-
-
-def near_dup_clusters(
-    pairs: DataFrame,
-    driver_threshold: int = 1_000_000,
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup pairs (doc_a, doc_b) → cluster
-    representative per doc. Returns (doc_id, cluster_id).
-
-    Two physical strategies behind one API:
-
-    * pair set ≤ ``driver_threshold``: collect and solve with union-find on
-      the driver — a distributed iterative loop costs a fixed ~1s of job
-      scheduling per iteration, which dwarfs a million-edge union-find;
-    * larger: iterative min-label propagation with ``localCheckpoint`` per
-      iteration (the scalable path — converges in O(diameter) rounds; dedup
-      clusters are shallow).
-    """
-    # cheap row-count probe first (no data transfer when over threshold);
-    # under it, ONE Arrow toPandas transfer feeds the union-find. Callers
-    # passing an expensive un-materialized plan should persist/checkpoint it
-    # (lsh_candidate_pairs already returns a checkpointed frame).
-    n_pairs = pairs.limit(driver_threshold + 1).count()
-    if n_pairs <= driver_threshold:
-        pdf = pairs.toPandas()
-        rows = list(pdf.itertuples(index=False, name=None))
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        def union(a, b):
-            for v in (a, b):
-                if v not in parent:
-                    parent[v] = v
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # min label wins (matches the distributed min-propagation)
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-
-        for r in rows:
-            union(r[0], r[1])
-        labels = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        schema = pairs.schema
-        t = schema[0].dataType.simpleString()
-        return spark.createDataFrame(labels, f"doc_id {t}, cluster_id {t}")
-    return _near_dup_clusters_distributed(pairs, max_iterations=max_iterations)
-
-
-def _near_dup_clusters_distributed(
-    pairs: DataFrame, max_iterations: int = 20
-) -> DataFrame:
-    """The scalable min-label-propagation path (used above threshold).
-
-    ``max_iterations`` bounds the label-propagation rounds; propagation
-    converges in O(cluster diameter), so a hit on the cap means a
-    pathological duplicate chain — we log it (like the bnode closure,
-    ``strategies/bnode.py``) instead of silently returning split
-    clusters. The driver union-find path is exact and has no cap."""
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)  # edges are re-joined every iteration
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["doc_id"])
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["doc_id"] == neighbor_min["src"], "left")
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("cluster_id", "old"), on="doc_id")
-            .filter(F.col("cluster_id") != F.col("old"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if changed:
-            break
-    else:
-        logger.warning(
-            "near-dup connected components did not converge in %d "
-            "iterations — returning possibly split clusters (raise "
-            "max_iterations for chains deeper than the cap)",
-            max_iterations,
-        )
-    return labels

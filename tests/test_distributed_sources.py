@@ -1,6 +1,6 @@
 """Round-3 fixes: distributed multi-file Turtle/RDF-XML parsing with
 per-file blank-node namespacing, RDF/XML parseType='Collection' and
-single-node-root base scoping, distributed-CC convergence warning, and
+single-node-root base scoping, log-round connected components, and
 streaming source validation/baseIRI."""
 
 from __future__ import annotations
@@ -182,29 +182,39 @@ def test_rdfxml_single_node_root_base_applies_once():
     ]
 
 
-# -- distributed CC convergence warning ------------------------------------
+# -- connected components: log-round convergence, no cap --------------------
 
 
-def test_near_dup_clusters_nonconvergence_warns(spark, caplog):
-    import logging
+def test_connected_components_long_path_one_cluster(spark, monkeypatch):
+    """A 10,000-node path is one cluster whose id is its smallest node, on
+    the driver union-find and on large-star/small-star, which needs at most
+    2·⌈log₂ n⌉ rounds where min-label propagation needed one per hop."""
+    import math
 
+    from rdf_dataset_fragmenter_js_spark import graph
     from rdf_dataset_fragmenter_js_spark.textops.dedup import near_dup_clusters
 
-    # chain 0-1-2-...-9: min-label propagation moves the min one hop/round
+    n = 10_000
+    # mixed orientation: odd edges are given high → low
     pairs = spark.createDataFrame(
-        [(f"d{i}", f"d{i + 1}") for i in range(9)], "doc_a string, doc_b string"
+        [(i, i + 1) if i % 2 == 0 else (i + 1, i) for i in range(n - 1)],
+        "doc_a long, doc_b long",
     )
-    with caplog.at_level(logging.WARNING, logger="rdf_dataset_fragmenter_js_spark.textops.dedup"):
-        split = near_dup_clusters(pairs, driver_threshold=0, max_iterations=2)
-        n_clusters_capped = split.select("cluster_id").distinct().count()
-    assert any("did not converge" in r.message for r in caplog.records)
-    assert n_clusters_capped > 1  # documented behavior: split clusters
+    rounds = []
+    distributed = graph._connected_components_distributed
 
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger="rdf_dataset_fragmenter_js_spark.textops.dedup"):
-        full = near_dup_clusters(pairs, driver_threshold=0, max_iterations=20)
-    assert not any("did not converge" in r.message for r in caplog.records)
-    assert full.select("cluster_id").distinct().count() == 1
+    def spy(p):
+        labels, r = distributed(p)
+        rounds.append(r)
+        return labels, r
+
+    monkeypatch.setattr(graph, "_connected_components_distributed", spy)
+    for threshold in (0, 1_000_000):
+        labels = near_dup_clusters(pairs, driver_threshold=threshold)
+        got = labels.groupBy("cluster_id").count().collect()
+        assert [(r.cluster_id, r["count"]) for r in got] == [(0, n)], threshold
+    assert len(rounds) == 1  # only the forced path ran distributed
+    assert rounds[0] <= 2 * math.ceil(math.log2(n))
 
 
 # -- streaming source validation + baseIRI ---------------------------------

@@ -148,13 +148,16 @@ def test_pair_scores_match_python_sets(spark):
     ),
 )
 def test_bnode_closure_matches_bruteforce(base, edges):
-    """_closure_driver == brute-force reachability: bnode b gets owner o iff
-    some seed (b0, o) exists with b reachable from b0 along edges."""
-    from rdf_dataset_fragmenter_js_spark.strategies.bnode import _closure_driver
+    """The driver ownership worklist == brute-force reachability: bnode b
+    gets owner o iff some seed (b0, o) exists with b reachable from b0
+    along edges."""
+    from rdf_dataset_fragmenter_js_spark.graph import _reachable_owners_driver
 
     b_rows = [(f"b{b}", f"o{o}") for b, o in base]
     e_rows = [(f"b{s}", f"b{d}") for s, d in edges]
-    got = set(_closure_driver(b_rows, e_rows))
+    got = _reachable_owners_driver(b_rows, e_rows)
+    assert len(got) == len(set(got))
+    got = set(got)
 
     # brute force: reachability from each seeded bnode
     adj: dict[str, set] = {}
@@ -172,6 +175,68 @@ def test_bnode_closure_matches_bruteforce(base, edges):
                     seen.add(nxt)
                     stack.append(nxt)
     assert got == want
+
+
+def _components_bruteforce(pairs) -> dict:
+    """node → smallest node reachable over the undirected pairs."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        seen = {start}
+        stack = [start]
+        while stack:
+            for nxt in adj[stack.pop()]:
+                if nxt not in seen:
+                    seen.add(nxt)
+                    stack.append(nxt)
+        out[start] = min(seen)
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    pairs=st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)), max_size=30),
+    n_reversed=st.integers(0, 30),
+)
+@example(pairs=[(3, 3)], n_reversed=0)
+@example(pairs=[(2, 1), (1, 2), (1, 2), (4, 4)], n_reversed=2)
+def test_union_find_matches_bruteforce(pairs, n_reversed):
+    """union_find maps every node named in the pairs — self-loops,
+    duplicates and reversed pairs included — to the smallest node of its
+    component."""
+    from rdf_dataset_fragmenter_js_spark.graph import union_find
+
+    pairs = pairs + [(b, a) for a, b in pairs[:n_reversed]]
+    assert union_find(pairs) == _components_bruteforce(pairs)
+
+
+# Fixed graphs for the distributed-vs-driver components check: each covers
+# a shape the large-star/small-star loop must close exactly.
+_CC_GRAPHS = {
+    "self_loop_only_node": [(5, 5), (1, 2)],
+    "duplicate_and_reversed": [(1, 2), (2, 1), (1, 2), (3, 2)],
+    "two_components": [(1, 2), (2, 3), (10, 11), (12, 11)],
+    "star": [(7, i) for i in range(8, 20)] + [(7, 3)],
+    "path": [(i + 1, i) if i % 3 else (i, i + 1) for i in range(40)],
+    "string_ids": [("carol diaz", "diaz"), ("diaz", "c diaz"), ("emma", "emma")],
+}
+
+
+def test_connected_components_distributed_matches_union_find(spark):
+    """Large-star/small-star == union_find on each fixed graph, and the
+    label columns keep the input id type (long or string)."""
+    from rdf_dataset_fragmenter_js_spark.graph import connected_components, union_find
+
+    for name, pairs in _CC_GRAPHS.items():
+        df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
+        labels = connected_components(df, driver_threshold=0)
+        t = df.dtypes[0][1]
+        assert labels.dtypes == [("doc_id", t), ("cluster_id", t)], name
+        got = sorted((r.doc_id, r.cluster_id) for r in labels.collect())
+        assert got == sorted(union_find(pairs).items()), name
 
 
 @settings(max_examples=200, deadline=None)

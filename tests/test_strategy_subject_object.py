@@ -180,3 +180,22 @@ def test_bnode_owners_driver_and_distributed_agree(spark):
         ("b2", "http://ex.org/a"), ("b2", "http://ex.org/b"),
         ("b3", "http://ex.org/a"), ("b3", "http://ex.org/b"),
     }
+
+
+def test_bnode_owners_long_chain_has_no_depth_limit(spark):
+    """A 61-bnode chain under one named owner: every bnode is owned, on the
+    driver worklist and on the distributed frontier loop (the reference
+    chases chains to a fixpoint with no depth limit)."""
+    from rdf_dataset_fragmenter_js_spark.strategies.bnode import bnode_owners
+
+    n = 61
+    rows = [quad("http://ex.org/a", "http://ex.org/p", "b0", o_type="BlankNode")]
+    rows += [
+        quad(f"b{i}", "http://ex.org/p", f"b{i + 1}", s_type="BlankNode", o_type="BlankNode")
+        for i in range(n - 1)
+    ]
+    quads = quads_df(spark, rows)
+    want = sorted((f"b{i}", "http://ex.org/a") for i in range(n))
+    for threshold in (1_000_000, 0):
+        got = bnode_owners(quads, "s", "s_type", "o", "o_type", driver_threshold=threshold)
+        assert sorted((r.bnode, r.owner) for r in got.collect()) == want, threshold

@@ -18,8 +18,7 @@ shared host has multi-second additive noise spikes; min wall-clock is the
 closest estimator of capacity).
 
 Usage: python tools/scaling_bench.py [n_pages] [level ...]
-Writes BENCH.md at the repo root (scaling section; the distributed-path
-section is produced by tools/distributed_paths_bench.py).
+Writes BENCH.md at the repo root (scaling section).
 """
 
 from __future__ import annotations
@@ -195,8 +194,8 @@ with its ceiling, not as the headline.
 
 Reproduce: `python tools/scaling_bench.py {n_pages} {' '.join(str(c) for c in levels)}`.
 Per-query timings: `python bench.py` (BENCH_r{{N}}.json).
-Distributed-path timings: see the section below (if present), produced by
-`python tools/distributed_paths_bench.py`.
+Distributed-path timings: see the section below — history from a removed
+script; pytest now asserts the path equalities it checked.
 """
         )
         # Cross-window history: the shared host's OWN capacity swings by
