@@ -14,6 +14,7 @@ quads and the comparison isolates the operator under test.
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -800,6 +801,16 @@ def q_dedup_clusters(spark, sf_dir):
     )
 
 
+def q_dedup_clusters_distributed(spark, sf_dir):
+    """``dedup_clusters`` through the distributed large-star/small-star loop
+    (``driver_threshold=0``); same oracle."""
+    docs = _docs(spark, sf_dir)
+    pairs = D.lsh_candidate_pairs(docs, k=8, bands=4, shingle_size=8)
+    return D.near_dup_clusters(pairs, driver_threshold=0).select(
+        "doc_id", F.col("cluster_id").cast("long").alias("cluster_id")
+    )
+
+
 def q_text_quality(spark, sf_dir):
     out = Q.quality_features(_docs(spark, sf_dir))
     return out.select(
@@ -1082,6 +1093,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_clusters": q_dedup_clusters,
+        "dedup_clusters_distributed": q_dedup_clusters_distributed,
         "dedup_simhash": q_dedup_simhash,
         "text_quality": q_text_quality,
         "text_lang_id": q_text_lang_id,
@@ -1109,16 +1121,28 @@ shingles AS (
 )
 """
 
+# MinHash restated from its definition, not from the package: each shingle
+# is hashed once, h = (first 8 hex digits of md5(shingle)) mod P with
+# P = 2^31 - 1, and permutation i is min((a_i * h + b_i) mod P) as BIGINT.
+# The constants follow the documented rule d = md5("perm:<i>"),
+# a_i = int(d[:8], 16) % (P - 1) + 1, b_i = int(d[8:16], 16) % P.
+_P = 2**31 - 1
+_PERMS = [
+    (int(d[:8], 16) % (_P - 1) + 1, int(d[8:16], 16) % _P)
+    for d in (hashlib.md5(f"perm:{i}".encode()).hexdigest() for i in range(8))
+]
 _MINHASH_SIG = (
     "sig AS (SELECT doc_id, "
-    + ", ".join(f"min(md5('{i}:' || shingle)) AS mh_{i}" for i in range(8))
-    + " FROM shingles GROUP BY doc_id)"
+    + ", ".join(f"min(({a} * h + {b}) % {_P}) AS mh_{i}" for i, (a, b) in enumerate(_PERMS))
+    + f" FROM (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT % {_P} AS h"
+    + " FROM shingles) GROUP BY doc_id)"
 )
 
 _BANDED = (
     "banded AS ("
     + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(mh_{2 * b} || '|' || mh_{2 * b + 1}) AS band_key FROM sig"
+        f"SELECT doc_id, {b} AS band,"
+        f" md5(CAST(mh_{2 * b} AS VARCHAR) || '|' || CAST(mh_{2 * b + 1} AS VARCHAR)) AS band_key FROM sig"
         for b in range(4)
     )
     + ")"
@@ -1132,6 +1156,31 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM banded a JOIN banded b
   ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 """
+
+
+# Transitive closure of the LSH pairs; the driver and distributed
+# connected-components paths must both reproduce it.
+_DEDUP_CLUSTERS_SQL = f"""
+            WITH RECURSIVE {_SHINGLES.strip()},
+            {_MINHASH_SIG},
+            {_BANDED},
+            pairs AS (
+              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+              FROM banded a JOIN banded b
+                ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+            ),
+            edges AS (
+              SELECT doc_a AS s, doc_b AS d FROM pairs
+              UNION ALL SELECT doc_b, doc_a FROM pairs
+            ),
+            reach(a, b) AS (
+              SELECT s, s FROM (SELECT s FROM edges UNION SELECT d FROM edges)
+              UNION
+              SELECT r.a, e.d FROM reach r JOIN edges e ON r.b = e.s
+            )
+            SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_id
+            FROM reach GROUP BY a
+        """
 
 
 # Word-8-gram CTE chain over a prior CTE `w(doc_id, ws, ...)` — zipped
@@ -2060,27 +2109,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes na ON na.doc_id = i.doc_a
             JOIN sizes nb ON nb.doc_id = i.doc_b
         """,
-        "dedup_clusters": f"""
-            WITH RECURSIVE {_SHINGLES.strip()},
-            {_MINHASH_SIG},
-            {_BANDED},
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM banded a JOIN banded b
-                ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-            ),
-            edges AS (
-              SELECT doc_a AS s, doc_b AS d FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(a, b) AS (
-              SELECT s, s FROM (SELECT s FROM edges UNION SELECT d FROM edges)
-              UNION
-              SELECT r.a, e.d FROM reach r JOIN edges e ON r.b = e.s
-            )
-            SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_id
-            FROM reach GROUP BY a
-        """,
+        "dedup_clusters": _DEDUP_CLUSTERS_SQL,
+        "dedup_clusters_distributed": _DEDUP_CLUSTERS_SQL,
         "dedup_simhash": f"""
             WITH toks AS (
               SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok

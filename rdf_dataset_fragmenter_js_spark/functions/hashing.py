@@ -304,6 +304,8 @@ def murmur_hex_col(col: Column) -> Column:
 
 def md5_bucket(col: Column, buckets: int) -> Column:
     """Deterministic bucket id in [0, buckets) derived from md5 — identical in
-    Spark and DuckDB (used by oracle-checked dedup/sampling operators; conv()
-    of the first 8 hex chars is exact in 64-bit integer range)."""
+    Spark and DuckDB (used by oracle-checked dedup operators: the MinHash
+    shingle hash and the canonicalization salt; conv() of the first 8 hex
+    chars is exact in 64-bit integer range). md5 reads a string as UTF-8;
+    a NULL input gives NULL."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % buckets

@@ -28,6 +28,17 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 
+def local_frame(spark, columns: dict[str, list], schema: str) -> DataFrame:
+    """A driver-built result as a DataFrame: ``columns`` (name → values)
+    goes to Spark as an Arrow table cast to ``schema``, which plans a
+    ``LocalTableScan`` (also when empty, and whatever the session's Arrow
+    setting). A frame built from a list of tuples is a pickled Python RDD
+    instead, which runs a Python worker every time it is evaluated."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.Table.from_pydict(columns), schema)
+
+
 def union_find(pairs) -> dict:
     """node → smallest member of its component, for every node named in
     ``pairs`` (a node seen only in a self-loop ``(a, a)`` maps to itself).
@@ -66,8 +77,10 @@ def connected_components(pairs: DataFrame, driver_threshold: int = 1_000_000) ->
         pdf = pairs.select("doc_a", "doc_b").toPandas()
         labels = union_find(zip(pdf["doc_a"], pdf["doc_b"]))
         t = pairs.schema["doc_a"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            list(labels.items()), f"doc_id {t}, cluster_id {t}"
+        return local_frame(
+            pairs.sparkSession,
+            {"doc_id": list(labels), "cluster_id": list(labels.values())},
+            f"doc_id {t}, cluster_id {t}",
         )
     labels, _ = _connected_components_distributed(pairs)
     return labels
@@ -143,16 +156,15 @@ def reachable_owners(
         base.limit(driver_threshold + 1).count() <= driver_threshold
         and edges.limit(driver_threshold + 1).count() <= driver_threshold
     ):
-        import pandas as pd
-
         b_pdf = base.toPandas()
         e_pdf = edges.toPandas()
         rows = _reachable_owners_driver(
             zip(b_pdf["bnode"], b_pdf["owner"]), zip(e_pdf["src"], e_pdf["dst"])
         )
-        # pandas-backed, so the rows go back as Arrow batches, not py4j Rows
-        return base.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=["bnode", "owner"]), "bnode string, owner string"
+        return local_frame(
+            base.sparkSession,
+            {"bnode": [b for b, _ in rows], "owner": [o for _, o in rows]},
+            "bnode string, owner string",
         )
 
     owners = frontier = base

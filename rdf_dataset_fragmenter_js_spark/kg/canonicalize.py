@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf_dataset_fragmenter_js_spark.graph import connected_components, union_find
+from rdf_dataset_fragmenter_js_spark.functions.hashing import md5_bucket
+from rdf_dataset_fragmenter_js_spark.graph import connected_components, local_frame, union_find
 from rdf_dataset_fragmenter_js_spark.kg.link import token_blocks
 from rdf_dataset_fragmenter_js_spark.textops.dedup import _pair_scores, containment_bp
 
@@ -60,13 +61,7 @@ def surface_counts(mentions: DataFrame, surface_col: str = "surface") -> DataFra
     groupBy key carries the salt (hot keys spread over SALTS reducers), the
     second merges partials."""
     norm = normalize_surface_col(F.col(surface_col)).alias("norm")
-    salted = mentions.select(
-        norm,
-        (
-            F.conv(F.substring(F.md5(F.col(surface_col).cast("binary")), 1, 8), 16, 10).cast("long")
-            % SALTS
-        ).alias("salt"),
-    )
+    salted = mentions.select(norm, md5_bucket(F.col(surface_col), SALTS).alias("salt"))
     partial = salted.groupBy("norm", "salt").agg(F.count(F.lit(1)).alias("pn"))
     return partial.groupBy("norm").agg(F.sum("pn").alias("n"))
 
@@ -166,8 +161,10 @@ def canonical_mapping(
         sample = forms.limit(driver_threshold + 1).collect()
         if len(sample) <= driver_threshold:
             out = _canonical_mapping_driver_dict([r[0] for r in sample], containment_threshold)
-            return mentions.sparkSession.createDataFrame(
-                list(out.items()), "norm string, canonical_id string"
+            return local_frame(
+                mentions.sparkSession,
+                {"norm": list(out), "canonical_id": list(out.values())},
+                "norm string, canonical_id string",
             )
     docs = forms.select(F.col("norm").alias("doc_id"), F.col("norm").alias("text"))
     blocked = docs.select("doc_id", F.explode(token_blocks(F.col("doc_id"))).alias("block"))
@@ -236,9 +233,13 @@ def surface_canonical_mapping(
             norms = {s: _normalize_surface_py(s) for s in surfaces}
             forms = sorted({n for n in norms.values() if n})
             canon = _canonical_mapping_driver_dict(forms, containment_threshold)
-            rows = [(s, canon.get(norms[s], norms[s])) for s in surfaces]
-            return mentions.sparkSession.createDataFrame(
-                rows, "surface string, canonical_id string"
+            return local_frame(
+                mentions.sparkSession,
+                {
+                    "surface": surfaces,
+                    "canonical_id": [canon.get(norms[s], norms[s]) for s in surfaces],
+                },
+                "surface string, canonical_id string",
             )
     raw = raw.localCheckpoint(eager=True)
     norm_mapping = canonical_mapping(

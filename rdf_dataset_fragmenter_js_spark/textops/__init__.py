@@ -5,6 +5,7 @@ analysis (lang-id, quality, tokens, fingerprints) and multimodal plumbing.
 
 Engine-portability note: where results must be verifiable against an
 independent SQL oracle, hashing is md5-based (identical in Spark and DuckDB)
-and MinHash uses lexicographic minima of salted md5 hex digests — no
-engine-specific hash functions in observable outputs.
+and MinHash hashes each shingle once by its md5 prefix, then takes integer
+minima of affine permutations mod 2^31 − 1 — no engine-specific hash
+functions in observable outputs.
 """

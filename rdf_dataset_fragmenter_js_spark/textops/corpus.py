@@ -111,7 +111,9 @@ def decontaminate_fuzzy(
     text_col: str = "text",
 ) -> DataFrame:
     """Fuzzy train/test decontamination: flag training documents whose
-    MinHash signature shares ANY LSH band with a benchmark document —
+    integer MinHash signature (:func:`~.dedup.minhash_signatures`: one
+    md5-prefix hash per shingle, k affine-permutation long minima) shares
+    ANY LSH band with a benchmark document —
     catching paraphrased/partially-edited benchmark leakage that exact
     n-gram overlap (:func:`decontaminate`) misses. Returns one row per
     input document: ``(doc_id, contaminated)``.
@@ -119,10 +121,10 @@ def decontaminate_fuzzy(
     Scale shape: both sides reuse :func:`~.dedup.banded_signatures`; the
     benchmark band-key set (bands × |benchmark| rows, tiny vs the corpus)
     is distinct-ed and explicitly ``F.broadcast``, so the corpus side is a
-    scan → shingle → signature pipeline filtered in-stage — the corpus
-    never shuffles to a join. If the benchmark rows are also present in
-    ``docs`` they flag themselves, which is the correct semantics (they
-    ARE the benchmark)."""
+    scan → shingle → signature pipeline (one hash aggregate of k longs per
+    document) filtered in-stage — the corpus never shuffles to a join. If
+    the benchmark rows are also present in ``docs`` they flag themselves,
+    which is the correct semantics (they ARE the benchmark)."""
     from rdf_dataset_fragmenter_js_spark.textops.dedup import banded_signatures
 
     db = banded_signatures(

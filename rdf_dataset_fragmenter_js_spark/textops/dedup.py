@@ -5,10 +5,11 @@ DataFrame plans:
 
 * exact duplicates — hash-groupBy on md5(text); one shuffle, map-side
   partial aggregation;
-* MinHash + LSH — shingle set → k salted-md5 minima → banded signatures →
-  bucket self-join (candidates only meet inside a bucket: the join key is
-  the band hash, so the shuffle is ~linear in data size, never the
-  quadratic all-pairs);
+* MinHash + LSH — shingle set → one 31-bit md5-prefix hash per shingle →
+  k affine permutations ``(a_i·h + b_i) mod P`` reduced by long min() →
+  banded signatures → bucket self-join (candidates only meet inside a
+  bucket: the join key is the band hash, so the shuffle is ~linear in data
+  size, never the quadratic all-pairs);
 * SimHash — 16-bit token-hash sign aggregate, useful as a cheap near-dup
   blocking key;
 * n-gram Jaccard — exact verification on LSH candidates (the classic
@@ -20,15 +21,19 @@ DataFrame plans:
 One shingle-set core serves every char n-gram score in the package:
 :func:`shingle_set` is the only definition of n-gram positions, and
 :func:`jaccard_bp` / :func:`containment_bp` score two sets in basis points.
-MinHash explodes the set and reduces it with min() before any shuffle
-leaves the map side; pair verification shingles only the documents its
-candidate pairs name, one array per document.
+MinHash explodes the set and reduces it with fixed-width long minima, a
+hash aggregate with map-side partial mins; pair verification shingles only
+the documents its candidate pairs name, one array per document.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from rdf_dataset_fragmenter_js_spark.functions.hashing import md5_bucket
 
 # re-exported: dedup callers cluster verified pairs as D.near_dup_clusters
 from rdf_dataset_fragmenter_js_spark.graph import (  # noqa: F401
@@ -82,6 +87,22 @@ def containment_bp(a: Column, b: Column) -> Column:
     ).cast("long")
 
 
+#: MinHash prime modulus, the Mersenne prime 2^31 − 1: every shingle hash
+#: and permuted value lies in [0, P), so a·h + b < 2^62 fits a long
+MINHASH_PRIME = 2**31 - 1
+
+
+def minhash_constants(k: int) -> list[tuple[int, int]]:
+    """(a_i, b_i) of the k affine permutations, one deterministic rule for
+    any k: with ``d = md5("perm:<i>")`` as hex, ``a_i = int(d[:8], 16) %
+    (P − 1) + 1`` ∈ [1, P−1] and ``b_i = int(d[8:16], 16) % P`` ∈ [0, P−1]."""
+    out = []
+    for i in range(k):
+        d = hashlib.md5(f"perm:{i}".encode()).hexdigest()
+        out.append((int(d[:8], 16) % (MINHASH_PRIME - 1) + 1, int(d[8:16], 16) % MINHASH_PRIME))
+    return out
+
+
 def minhash_signatures(
     docs: DataFrame,
     k: int = 8,
@@ -89,20 +110,24 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """k-permutation MinHash signature per doc: permutation i is simulated by
-    salting — ``min(md5(i || ':' || shingle))`` (lexicographic min of hex
-    digests ≡ min over a random permutation of shingle space). Returns
-    (doc_id, mh_0..mh_{k-1}). One explode + one groupBy; the min() combines
-    map-side so the shuffle carries k×32 bytes per doc. The exploded
-    :func:`shingle_set` is deduplicated inside its row, so no shuffle of
-    shingle rows is needed."""
+    """k-permutation MinHash signature per doc (Broder 1997): each shingle
+    of the exploded :func:`shingle_set` is hashed once, to ``h`` = the first
+    8 hex digits of its md5 (over UTF-8) mod P (``md5_bucket``; NULL for a
+    NULL shingle), and permutation i is the affine map
+    ``(a_i·h + b_i) mod P`` (:func:`minhash_constants`), so
+    ``mh_i = min((a_i·h + b_i) mod P)`` over the doc's shingles. Returns
+    (doc_id, mh_0..mh_{k-1}) as longs; a NULL text gives NULL minima, and
+    rows sharing a doc_id union their sets (the min over rows is the min
+    over the union). One explode + one groupBy of fixed-width longs: a hash
+    aggregate whose partial mins combine map-side, so the shuffle carries
+    k longs per doc."""
     sh = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingle_set(F.col(text_col), shingle_size)).alias("shingle"),
-    )
+    ).select("doc_id", md5_bucket(F.col("shingle"), MINHASH_PRIME).alias("h"))
     aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")).cast("binary"))).alias(f"mh_{i}")
-        for i in range(k)
+        F.min((F.col("h") * a + b) % MINHASH_PRIME).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(minhash_constants(k))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
@@ -129,7 +154,7 @@ def banded_signatures(
             F.lit(b).alias("band"),
             F.md5(
                 F.concat_ws(
-                    "|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
+                    "|", *[F.col(f"mh_{b * rows + r}").cast("string") for r in range(rows)]
                 ).cast("binary")
             ).alias("band_key"),
         )

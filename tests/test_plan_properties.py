@@ -63,6 +63,52 @@ def test_no_cartesian_products_anywhere(spark, queries):
         assert "CartesianProduct" not in plan, name
 
 
+def test_minhash_uses_fixed_width_aggregate(spark):
+    """The MinHash signature groupBy of ``dedup_minhash_lsh`` reduces long
+    minima, so it plans a HashAggregate with map-side partial mins — never
+    a SortAggregate (min over strings) or an ObjectHashAggregate. The
+    query returns checkpointed pairs, so the plan checked is the same
+    banded-signature stage over the query's documents."""
+    import __spark_entry__ as E
+    from rdf_dataset_fragmenter_js_spark.textops import dedup as D
+
+    plan = plan_of(D.banded_signatures(E._docs(spark, SF), k=8, bands=4, shingle_size=8))
+    assert "SortAggregate" not in plan and "ObjectHashAggregate" not in plan
+    assert "partial_min" in plan and "HashAggregate" in plan
+
+
+def test_driver_fast_paths_return_local_arrow_tables(spark):
+    """The driver fast paths of connected_components, canonical_mapping and
+    surface_canonical_mapping hand back an Arrow LocalTableScan, not a
+    pickled Python RDD (ExistingRDD), and their rows equal the distributed
+    plans'."""
+    from rdf_dataset_fragmenter_js_spark.graph import connected_components
+    from rdf_dataset_fragmenter_js_spark.kg.canonicalize import (
+        canonical_mapping,
+        surface_canonical_mapping,
+    )
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8), (9, 9)], "doc_a bigint, doc_b bigint")
+    mentions = spark.createDataFrame(
+        [("Alice Johnson",), ("A. Johnson",), ("Bob Smith",), ("B. Smith",), ("Acme Corp",)],
+        "surface string",
+    )
+    empty = spark.createDataFrame([], "surface string")
+    cases = [
+        (connected_components, pairs),
+        (canonical_mapping, mentions),
+        (surface_canonical_mapping, mentions),
+        (canonical_mapping, empty),
+    ]
+    for fn, arg in cases:
+        driver = fn(arg)
+        plan = plan_of(driver)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, fn.__name__
+        distributed = fn(arg, driver_threshold=0)
+        assert driver.dtypes == distributed.dtypes, fn.__name__
+        assert sorted(driver.collect()) == sorted(distributed.collect()), fn.__name__
+
+
 def test_column_pruning_reaches_scan(spark, queries):
     """Dedup reads only (doc_id, text) — scan width scales with used
     columns, not table width."""

@@ -8,6 +8,7 @@ one job per test, not per example)."""
 
 from __future__ import annotations
 
+import hashlib
 import random
 import string
 
@@ -136,6 +137,72 @@ def test_pair_scores_match_python_sets(spark):
     assert con == want(lambda i, na, nb: i * 10000 // min(na, nb))
     assert not {r[:2] for r in jac} & {("900", "901"), ("902", "903")}
     assert ("902", "904") in {r[:2] for r in con}
+
+
+def _minhash_py(texts, k, n):
+    """Plain-Python MinHash of one doc's rows: hash each distinct shingle
+    once (first 8 hex digits of md5 over UTF-8, mod P), then per
+    permutation i the min of (a_i·h + b_i) mod P, the constants derived
+    from md5("perm:<i>"). NULL text adds no hash; no hash gives NULL."""
+    p = 2**31 - 1
+    perms = []
+    for i in range(k):
+        d = hashlib.md5(f"perm:{i}".encode()).hexdigest()
+        perms.append((int(d[:8], 16) % (p - 1) + 1, int(d[8:16], 16) % p))
+    shingles = set().union(*(_shingles_py(t, n) for t in texts)) - {None}
+    hs = {int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % p for s in shingles}
+    return tuple(min(((a * h + b) % p for h in hs), default=None) for a, b in perms)
+
+
+def test_minhash_matches_python_restatement(spark):
+    """minhash_signatures / banded_signatures == a plain-Python restatement
+    on NULL text, text shorter than n, repeated shingles, duplicate doc_id
+    rows (their sets union; one of them NULL) and non-ASCII text, whose
+    code-point substrings must match Python slicing with md5 over UTF-8.
+    Two (k, bands) settings check the constant rule for any k."""
+    from rdf_dataset_fragmenter_js_spark.textops.dedup import (
+        banded_signatures,
+        minhash_signatures,
+    )
+
+    n = 3
+    docs = [
+        ("null", None),
+        ("short", "ab"),
+        ("empty", ""),
+        ("repeat", "abababababab"),
+        ("dup", "the quick fox"),
+        ("dup", "fox jumps over"),
+        ("dup", None),
+        ("utf", "naïve café ☃ 😀 Ωμέγα"),
+        ("astral", "😀😁😂🤣😃"),
+        ("plain", "the quick fox"),
+    ]
+    by_id: dict[str, list] = {}
+    for d, t in docs:
+        by_id.setdefault(d, []).append(t)
+    docs_df = spark.createDataFrame(docs, "doc_id string, text string")
+    for k, bands in ((8, 4), (6, 3)):
+        want = {d: _minhash_py(ts, k, n) for d, ts in by_id.items()}
+        sig = minhash_signatures(docs_df, k=k, shingle_size=n)
+        assert sig.dtypes[1:] == [(f"mh_{i}", "bigint") for i in range(k)]
+        got = {r[0]: tuple(r[1:]) for r in sig.collect()}
+        assert got == want, k
+        rows = k // bands
+        want_bands = {
+            (d, b, hashlib.md5(
+                "|".join(str(m) for m in mh[b * rows : (b + 1) * rows] if m is not None).encode()
+            ).hexdigest())
+            for d, mh in want.items()
+            for b in range(bands)
+        }
+        got_bands = {
+            tuple(r)
+            for r in banded_signatures(docs_df, k=k, bands=bands, shingle_size=n).collect()
+        }
+        assert got_bands == want_bands, k
+    assert want["null"] == (None,) * 6
+    assert want["dup"] != want["plain"]
 
 
 @settings(max_examples=200, deadline=None)
